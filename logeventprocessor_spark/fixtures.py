@@ -50,12 +50,15 @@ import pyarrow.parquet as pq
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES_ROOT = os.path.join(_REPO_ROOT, ".fixtures")
 
+# v4: shingle tokens are split from the whitespace-normalized text
+# the grams come from (tab/newline-edged text no longer miscounts),
+# which feeds the cached n-gram pair fixture.
 # v3: canonical rules gained the no-literal pin_code rule ([0-9]{6})
 # and the corpus plants 6-digit access codes (round-5 verdict task #9)
 # -- the flagship now exercises the pandas fallback + RLIKE prefilter.
 # v2: transcript corpus gained interleaved rate-limit bursts (second
 # concurrent cooldown chain per conversation, round-4 verdict task #5)
-_V = "v3"
+_V = "v4"
 TRANSCRIPTS_N_CONVS = 40
 MEDIA_N = 60
 # sf dir the driver's oracle comparison runs at. The oracle SQL strings

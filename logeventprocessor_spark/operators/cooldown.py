@@ -24,53 +24,18 @@ may split a partition into multiple record batches, the trailing group
 of each chunk is carried into the next chunk so no keyed scan is ever
 cut mid-group.
 
-The streaming form (streaming/pipeline.py) keys real state by
-(conv_id, rule_id) via ``applyInPandasWithState`` and shares
-``suppress_group`` below so the two paths cannot diverge.
+The streaming form (streaming/batch_state.py) is this same operator,
+seeded per micro-batch with each (conv_id, rule_id) key's last fire
+from the previous batch's snapshot (``prior=``), so the two paths
+cannot diverge.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
 from logeventprocessor_spark.rules import Rule
-
-
-def suppress_group(
-    g: pd.DataFrame, cooldown_ms: int, last_fire_ns: int | None = None
-) -> tuple[pd.DataFrame, int | None]:
-    """Greedy event-time cooldown scan over ONE (conv_id, rule_id) group.
-
-    ``g`` must be sorted by (ts, turn_idx). Returns (kept rows,
-    new last-fire time in ns) so the streaming path can persist state
-    across micro-batches.
-    """
-    # normalize to ns regardless of the frame's datetime unit: pandas
-    # frames born from Arrow batches carry datetime64[us] (int64 cast
-    # would be microseconds -- a silent 1000x cooldown inflation),
-    # while applyInPandasWithState delivers datetime64[ns]. Strip any
-    # tz first: a tz-aware column's to_numpy() yields object Timestamps
-    # whose datetime64 astype goes through numpy's deprecated tz parse.
-    # tz_convert("UTC") BEFORE dropping the tz keeps the ns values
-    # epoch-based whatever the session timezone -- the streaming
-    # backends seed prior_ns from JVM unix_micros (UTC epoch), and a
-    # bare tz_localize(None) on a non-UTC frame would skew every
-    # cross-batch cooldown seed by the tz offset.
-    s = g["ts"]
-    if getattr(s.dtype, "tz", None) is not None:
-        s = s.dt.tz_convert("UTC").dt.tz_localize(None)
-    ts_ns = s.to_numpy().astype("datetime64[ns]").astype("int64")
-    keep = [False] * len(g)
-    cd_ns = int(cooldown_ms) * 1_000_000
-    last = last_fire_ns
-    for i in range(len(g)):
-        if last is None or ts_ns[i] - last >= cd_ns:
-            keep[i] = True
-            last = int(ts_ns[i])
-    return g[pd.Series(keep, index=g.index)], last
 
 
 def apply_cooldown(
@@ -93,7 +58,7 @@ def apply_cooldown(
 
     ``prior``: optional (conv_id, rule_id, prior_ns) frame seeding each
     key's greedy scan with its last fire from an earlier batch -- the
-    cross-batch half of the snapshot-state streaming backend
+    cross-batch half of the streaming cooldown
     (streaming/batch_state.py). Joined BEFORE the repartition so the
     seed rides the same shuffle; nulls become -1 JVM-side (a ns value
     must never pass through a nullable float, 2^63-scale ints lose
@@ -151,12 +116,14 @@ def apply_cooldown(
             # rule)); building a pandas sub-frame per group cost
             # ~300 us EACH -- measured +1.5 s on the sf0.1 batch
             # pipeline when fixture v2 doubled the hot-group count
-            # (BENCH/batch_ab.json, round-5 verdict task #3). Same
-            # greedy semantics as suppress_group (the streaming
-            # backends' shared scan, pinned identical by
-            # test_cooldown_backends_agree): suppressed fires do not
-            # advance the clock; gap test is >= cooldown; ns
-            # normalization mirrors suppress_group's tz handling.
+            # (BENCH/batch_ab.json, round-5 verdict task #3).
+            # Suppressed fires do not advance the clock; gap test is
+            # >= cooldown. ns normalization: frames born from Arrow
+            # carry datetime64[us] (an int64 cast would be a silent
+            # 1000x cooldown inflation), and a tz-aware column is
+            # converted to UTC BEFORE dropping the tz, so ns values
+            # are epoch-based whatever the session timezone -- the
+            # ``prior`` seed comes from JVM unix_micros (UTC epoch).
             import numpy as np
 
             s = pdf["ts"]

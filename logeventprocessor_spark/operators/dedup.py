@@ -70,7 +70,8 @@ def _gram_array(text_col: str, n: int):
     """(toks, grams) column expressions: whitespace-tokenize and build
     the word n-gram array. Shared by every shingle-based operator so
     the tokenization can never drift between them (the DuckDB oracles
-    replicate exactly this split/lower/trim).
+    split ``lower(trim(text))`` on ``\\s+``, which agrees on text
+    without tab/newline edges).
 
     The gram array is built with ONE codegen'd regex over the
     whitespace-normalized text -- a token-start anchor (``(?<!\\S)``)
@@ -89,9 +90,14 @@ def _gram_array(text_col: str, n: int):
     Rows with fewer than ``n`` tokens yield the (shorter) list of
     matches rather than the transform form's single partial gram --
     callers already filter ``size(toks) >= n`` before using grams,
-    exactly as before."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    exactly as before.
+
+    ``toks`` splits the SAME single-space-normalized string the grams
+    come from, so ``size(toks) - n + 1`` is the gram count on every
+    input. (Spark's ``trim`` strips only spaces, so splitting
+    ``trim(text)`` would count an empty token at a tab or newline edge.)"""
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    toks = F.split(norm, " ")
     pat = r"(?<!\S)(?=((?:\S+ ){%d}\S+))" % (n - 1)
     grams = F.regexp_extract_all(norm, F.lit(pat), 1)
     return toks, grams

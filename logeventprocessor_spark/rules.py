@@ -177,8 +177,9 @@ def publish_rules(path: str, yaml_text: str) -> None:
     analog of the reference's mutex-guarded swap, main.cpp:202-223):
     with atomic publication no reader -- driver or executor task --
     can ever observe a half-written rule set, only the old or the new
-    complete version. See ``operators.match.dynamic_rules`` for the
-    reader half (per-micro-batch version pinning)."""
+    complete version. The reader half is
+    ``streaming.pipeline.start_pipeline_with_reload``, which reads the
+    file once per micro-batch on the driver."""
     import os
 
     tmp = f"{path}.tmp.{os.getpid()}"

@@ -1,16 +1,16 @@
 """Cross-batch cooldown state as per-batch-id parquet snapshots,
-managed inside ``foreachBatch`` -- the high-throughput backend of the
-streaming cooldown operator (T1).
+managed inside ``foreachBatch`` -- the state of the streaming cooldown
+operator (T1).
 
-Why this exists (round-3 verdict task #4, measured in
-scripts/stream_floor.py): ``applyInPandasWithState`` carries ~3-4 s of
-FIXED per-trigger cost at 32 shuffle partitions on this host -- a
-dedicated Python-worker fleet, state-store load/commit and timer scans
-per partition -- even with ZERO input rows, plus per-group dispatch on
-top. The same cooldown computed as a seeded batch ``mapInArrow``
-(operators/cooldown.py) costs ~0.3 s. This module supplies the missing
-cross-batch half: each micro-batch reads the last committed snapshot,
-seeds the greedy scan, and writes a new snapshot keyed by batch id.
+The cooldown itself is the batch operator (operators/cooldown.py,
+a seeded ``mapInArrow``); this module supplies the cross-batch half:
+each micro-batch reads the last committed snapshot, seeds the greedy
+scan, and writes a new snapshot keyed by batch id. Why not a Spark
+state store (round-3 verdict task #4; BENCH/BASELINE.md):
+``applyInPandasWithState`` measured ~3-4 s of FIXED per-trigger cost at
+32 shuffle partitions -- a dedicated Python-worker fleet, state-store
+load/commit and timer scans per partition -- even with ZERO input rows,
+where the seeded batch scan costs ~0.3 s.
 
 The pattern (stateful logic in ``foreachBatch`` + an idempotent keyed
 store) is the standard Structured-Streaming recipe for state that
@@ -29,10 +29,10 @@ Exactly-once / resumability contract:
 * the watermark is maintained in the snapshot meta
   (``max(prior_wm, max_event_ts - delay)``, Spark's own definition)
   and drives event-time eviction: a key is dropped once the watermark
-  passes ``last_fire + cooldown + grace``, the exact timeout rule of
-  the ``applyInPandasWithState`` backend -- state stays bounded by
+  passes ``last_fire + cooldown + grace`` -- state stays bounded by
   fire-rate x cooldown horizon, not stream length (the 10^12-turn
-  requirement).
+  requirement). A key whose rule no longer has a cooldown (hot rule
+  reload) is dropped at the next advance.
 
 State-size note at cluster scale: the snapshot rewrite per batch is a
 shuffle-free columnar write of the ACTIVE keys only (evicted keys never
@@ -57,7 +57,7 @@ from pyspark.sql import functions as F
 from logeventprocessor_spark.operators.cooldown import apply_cooldown
 from logeventprocessor_spark.rules import Rule
 
-# eviction grace matches stream_cooldown's timeout slack (+1 s)
+# eviction slack past last_fire + cooldown
 GRACE_MS = 1000
 
 _UNITS_MS = {
@@ -156,13 +156,14 @@ class CooldownSnapshotState:
         snapshot. Zero-cooldown rules never touch the scan (the same
         hot/cold Arrow split as the batch pipeline).
 
-        Late-data contract (parity with the store backend, where Spark
-        drops rows older than the watermark before the stateful op):
-        HOT-rule matches with ts < the snapshot watermark are dropped
-        here; cold-rule rows are never late-filtered in either backend
-        (they bypass state entirely). The snapshot watermark can lag
-        the store backend's by < cooldown (it derives from KEPT fires),
-        which is conservative -- it only ever drops a subset."""
+        Late-data contract (Spark's own rule for stateful operators,
+        which drop rows older than the watermark): HOT-rule matches
+        with ts < the snapshot watermark are dropped here -- otherwise
+        a key evicted by the watermark would let a within-cooldown fire
+        through. Cold-rule rows are never late-filtered (they bypass
+        state entirely). The watermark derives from KEPT fires, so it
+        can lag the raw event time by < cooldown, which is
+        conservative -- it only ever drops a subset."""
         if not self.cooldowns:
             return matches
         prior_df, wm_ns = self._prior_cached(batch_id)

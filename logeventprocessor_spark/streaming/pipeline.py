@@ -1,45 +1,50 @@
-"""The streaming engine: source -> watermark -> match -> keyed state ->
-step join -> exactly-once sink (SURVEY.md 3.2 "Spark analog").
+"""The streaming engine: the batch CEP pipeline run per micro-batch,
+seeded with snapshot state (SURVEY.md 3.2 "Spark analog").
 
-Layout of the query DAG (all public APIs, no custom Catalyst rules):
+Layout of the query (all public APIs, no custom Catalyst rules):
 
   readStream(parquet/iceberg, TRANSCRIPTS_SCHEMA)
     -> filter(ts >= late_cutoff)            # F6: reference's startup-time
                                             # late-data rejection
                                             # (ActionSender.cpp:660-677)
-    -> withWatermark("ts", delay)           # state eviction policy
-    -> mapInPandas(match)                   # M1/M2: vectorized rule match
-    -> applyInPandasWithState(cooldown)     # T1: keyed (conv_id, rule_id)
+    -> mapInArrow(match)                    # M1/M2: vectorized rule match
+    [-> stream-stream context join]         # T5, optional
+    -> foreachBatch:
+         apply_cooldown(prior=snapshot)     # T1: keyed (conv_id, rule_id)
                                             # event-time suppression
-    -> broadcast join steps + render        # T3/T4/M3
-    -> foreachBatch(ParquetUpsertSink)      # T2 (stable sort) + T6/K1
+         -> broadcast join steps + render   # T3/T4/M3
+         -> ParquetUpsertSink               # T2 (stable sort) + T6/K1
                                             # exactly-once idempotent write
+         -> snapshot advance                # streaming/batch_state.py
 
-The cooldown state function reuses ``operators.cooldown.suppress_group``
-so the batch and streaming semantics cannot diverge; state is one
-``last_fire_ns`` per key, evicted by event-time timeout once the
-watermark passes last_fire + cooldown (bounded state at 10^12-turn
-scale -- north-rule requirement).
+The cooldown is the batch operator (``operators.cooldown.apply_cooldown``)
+seeded with each key's last fire from the previous batch's snapshot, so
+the batch and streaming semantics cannot diverge; state is one
+``last_fire_ns`` per key, evicted once the watermark passes
+last_fire + cooldown (bounded state at 10^12-turn scale -- north-rule
+requirement).
 """
 
 from __future__ import annotations
 
+import os
+import time
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import types as T
 
-from logeventprocessor_spark.operators.cooldown import suppress_group
-from logeventprocessor_spark.operators.match import match_turns
+from logeventprocessor_spark.operators.match import match_turns, prefilter_condition
 from logeventprocessor_spark.operators.steps import expand_steps
-from logeventprocessor_spark.rules import Rule
-from logeventprocessor_spark.schema import MATCHES_SCHEMA, TRANSCRIPTS_SCHEMA
-from logeventprocessor_spark.streaming.sink import ParquetUpsertSink
-
-COOLDOWN_STATE_SCHEMA = T.StructType(
-    [T.StructField("last_fire_ns", T.LongType(), True)]
+from logeventprocessor_spark.rules import Rule, load_rules_yaml
+from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
+from logeventprocessor_spark.streaming.batch_state import (
+    CooldownSnapshotState,
+    delay_to_ms,
 )
+from logeventprocessor_spark.streaming.sink import ParquetUpsertSink
 
 
 def read_transcripts_stream(
@@ -53,159 +58,6 @@ def read_transcripts_stream(
     if max_files_per_trigger:
         r = r.option("maxFilesPerTrigger", max_files_per_trigger)
     return r.parquet(input_dir)
-
-
-def stream_cooldown(matches: DataFrame, rules: list[Rule]) -> DataFrame:
-    """Streaming T1: applyInPandasWithState keyed (conv_id, rule_id).
-
-    Rows of each key inside a micro-batch are processed in
-    (ts, turn_idx) order -- the engine's deterministic ordering
-    contract; ``last_fire_ns`` persists across micro-batches.
-    """
-    cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
-    if not cooldowns:
-        return matches
-
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        conv_id, rule_id = key
-        cd = cooldowns[rule_id]
-        pdfs = [p for p in pdf_iter if not p.empty]
-        if not pdfs:
-            return
-        g = pd.concat(pdfs, ignore_index=True)
-        g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-        last = state.getOption
-        last_ns = last[0] if last is not None else None
-        kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-        if new_last is not None:
-            state.update((int(new_last),))
-            # evict once the watermark passes last_fire + cooldown (+1 s
-            # slack); must stay above the current watermark
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        if len(kept):
-            yield kept
-
-    # callers route only cooldown-bearing matches here (see
-    # build_match_stream); any zero-cooldown stragglers pass through
-    # the state fn untouched would be wrong, so filter defensively
-    hot = matches.filter(F.col("rule_id").isin(list(cooldowns.keys())))
-    return hot.groupBy("conv_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=MATCHES_SCHEMA,
-        stateStructType=COOLDOWN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def stream_cooldown_tws(matches: DataFrame, rules: list[Rule]) -> DataFrame:
-    """T1 on the Spark 4 arbitrary-state API
-    (``transformWithStateInPandas`` + ``StatefulProcessor``): same
-    semantics as ``stream_cooldown`` (shares ``suppress_group``), but
-    state is a typed ValueState with an EXPLICIT event-time timer for
-    eviction instead of the applyInPandasWithState timeout -- the API
-    Spark is converging on for custom stateful operators (timers,
-    typed value/list/map state, TTL, state schema evolution).
-    REQUIRES the RocksDB state store provider (a transformWithState
-    constraint) AND the ``protobuf`` package (the API's state protocol
-    is protobuf-based; this sandbox container lacks it, so the parity
-    test skips here and the operator is exercised on protobuf-equipped
-    clusters -- recorded like the absent Iceberg jar). Kept alongside
-    the applyInPandasWithState form with a pytest parity pin so the
-    two can never diverge.
-
-    STATE-SCHEMA COMPATIBILITY: the ValueState widened from
-    ``last_fire_ns long`` to ``(last_fire_ns, timer_ms)``. Under the
-    default UnsafeRow state encoding Spark validates the stored schema
-    at query START, so restarting on a checkpoint written by the
-    1-field build fails before the in-code 1-tuple guards below ever
-    run -- those guards only help under
-    ``spark.sql.streaming.stateStore.encodingFormat=avro`` (schema
-    evolution). Upgrading an UnsafeRow-encoded deployment therefore
-    requires a fresh checkpoint (the sink is batch-id idempotent, so a
-    bounded replay from the source is safe)."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    cooldowns = {r.rule_id: r.cooldown_ms for r in rules if r.cooldown_ms > 0}
-    if not cooldowns:
-        return matches
-
-    class CooldownProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            # (last_fire_ns, timer_ms): the registered eviction timer is
-            # tracked IN state so each fire can delete the previous one
-            # -- unlike applyInPandasWithState's setTimeoutTimestamp,
-            # registerTimer accumulates timers, and a stale timer from
-            # fire #1 expiring after fire #2 would wipe live state and
-            # let a within-cooldown match through
-            self.state = handle.getValueState(
-                "last_fire", "last_fire_ns long, timer_ms long"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            conv_id, rule_id = key
-            cd = cooldowns[rule_id]
-            pdfs = [p for p in rows if not p.empty]
-            if not pdfs:
-                return
-            g = pd.concat(pdfs, ignore_index=True).sort_values(
-                ["ts", "turn_idx"], kind="mergesort"
-            )
-            prior = self.state.get()
-            last_ns = prior[0] if prior is not None else None
-            kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-            if new_last is not None:
-                # explicit event-time timer: fire once the watermark
-                # passes last_fire + cooldown, then drop the state
-                wm = timerValues.getCurrentWatermarkInMs()
-                timer_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-                # len guard: state persisted by a build predating the
-                # timer_ms field is a 1-tuple
-                prior_timer = (
-                    prior[1] if prior is not None and len(prior) > 1 else None
-                )
-                if prior_timer is not None and prior_timer != timer_ms:
-                    self.handle.deleteTimer(prior_timer)
-                self.state.update((int(new_last), int(timer_ms)))
-                if prior_timer != timer_ms:
-                    self.handle.registerTimer(timer_ms)
-            if len(kept):
-                yield kept
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            # second line of defense: even if a stale timer survived
-            # (e.g. state written by an older build without timer_ms),
-            # only clear state the expired timer actually covers;
-            # old-format 1-tuple state is treated as always-covered
-            prior = self.state.get()
-            if prior is not None:
-                covered = (
-                    len(prior) < 2
-                    or expiredTimerInfo.getExpiryTimeInMs() >= prior[1]
-                )
-                if covered:
-                    self.state.clear()
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    hot = matches.filter(F.col("rule_id").isin(list(cooldowns.keys())))
-    return hot.groupBy("conv_id", "rule_id").transformWithStateInPandas(
-        CooldownProcessor(),
-        outputStructType=MATCHES_SCHEMA,
-        outputMode="Append",
-        timeMode="EventTime",
-    )
 
 
 SEQUENCE_SCHEMA = T.StructType(
@@ -527,62 +379,100 @@ def stream_join_context(
     )
 
 
-def stream_cooldown_dynamic(matches: DataFrame, rules_path: str) -> DataFrame:
-    """Streaming T1 with HOT-RELOADABLE cooldown values: keyed
-    (conv_id, rule_id) ``applyInPandasWithState`` whose cooldown map is
-    re-read from the rules file per task (mtime-cached), NOT captured
-    in the closure -- so editing a rule's pattern or cooldown changes
-    behavior on the next micro-batch while every key's suppression
-    history (``last_fire_ns``) survives the swap. This is the
-    reference's semantics exactly: the config watcher swaps the rule
-    set (main.cpp:185-241) while the cooldown map lives on in
-    ActionManager (ActionManager.h:148-150).
+def _snapshot_batch(sink: ParquetUpsertSink, ack_types, extra_cols):
+    """``run(matches, batch_id, rules, cool)``: the ``foreachBatch``
+    body of both entry points -- cooldown gate, steps, sink write,
+    snapshot advance. Appends each batch's wall-time decomposition to
+    ``sink.phases`` (4 clock reads/batch; the scaling harness reads it)."""
+    sink.phases = []
 
-    Routes ALL matches through the state operator (rules may gain or
-    lose a cooldown at any time, so a plan-time hot/cold split is
-    impossible); rows of currently-cooldown-free rules pass through
-    without touching state. Measured cost of that flexibility
-    (scripts/stream_ab.py, 1M turns, local[32]): ~2.3x the fixed-rules
-    pipeline, dominated by per-(conv,rule)-group Python dispatch --
-    use ``start_pipeline`` when the rule set is static."""
-    from logeventprocessor_spark.operators.match import dynamic_rules
+    def run(df: DataFrame, batch_id: int, rules, cool) -> None:
+        # ONE cache (the gated matches) and TWO jobs per batch:
+        # (1) sink write -- which also populates the cache and
+        # computes the watermark's max event time for free via
+        # Observation; (2) the fires agg + snapshot write. A
+        # previous shape (cache raw matches AND gated, separate
+        # max-ts job) measured ~3.7 s of fixed per-batch work that
+        # capped streaming scaling (BENCH/BASELINE.md).
+        #
+        # Context (role/tool) rides THROUGH the gate and the step
+        # expansion as pass-through columns (apply_cooldown's
+        # output schema mirrors its input; expand_steps appends
+        # extra_cols) -- a previous shape split the context off,
+        # dropDuplicates'd it, and re-joined after expansion,
+        # costing a persist of the raw frame plus an extra
+        # exchange+agg and a join PER MICRO-BATCH for values the
+        # rows already carried.
+        t0 = time.time()
+        gated = cool.gate(df, batch_id).persist()
+        t_gate = time.time()
+        try:
+            obs = Observation(f"wm_{batch_id}")
+            # watermark source = HOT-rule event time only: cold rows
+            # never touch the snapshot, so they must not advance its
+            # eviction clock
+            wm_src = F.when(
+                F.col("rule_id").isin(list(cool.cooldowns)), F.col("ts")
+            )
+            out = expand_steps(
+                gated.observe(obs, F.max(wm_src).alias("max_ts")),
+                rules,
+                extra_cols=extra_cols,
+            )
+            sink.write(out, batch_id)
+            if ack_types:
+                acks = out.filter(
+                    F.col("action_type").isin(ack_types)
+                ).select(
+                    "conv_id", "turn_idx", "rule_id", "step_idx",
+                    F.lit("ack").alias("status"), "ts",
+                )
+                sink.write_table("acks", acks, batch_id)
+            t_sink = time.time()
+            cool.advance(gated, batch_id, max_ts=obs.get["max_ts"])
+            sink.phases.append({
+                "batch_id": int(batch_id),
+                # plan-build + snapshot read (driver-side)
+                "gate_plan_s": round(t_gate - t0, 3),
+                # job 1: scan->match->gate->expand->parquet write
+                "sink_write_s": round(t_sink - t_gate, 3),
+                # job 2: fires agg + snapshot commit
+                "advance_s": round(time.time() - t_sink, 3),
+            })
+        finally:
+            gated.unpersist()
 
-    def fn(key, pdf_iter, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        conv_id, rule_id = key
-        _, cooldowns = dynamic_rules(rules_path)
-        cd = int(cooldowns.get(rule_id, 0))
-        pdfs = [p for p in pdf_iter if not p.empty]
-        if not pdfs:
-            return
-        g = pd.concat(pdfs, ignore_index=True)
-        g = g.sort_values(["ts", "turn_idx"], kind="mergesort")
-        if cd <= 0:
-            # no active cooldown: pass through, leave any prior state
-            # untouched (the rule may regain its cooldown later; the
-            # reference's map likewise never forgets on config swap)
-            yield g
-            return
-        st = state.getOption
-        last_ns = st[0] if st is not None else None
-        kept, new_last = suppress_group(g, cd, last_fire_ns=last_ns)
-        if new_last is not None:
-            state.update((int(new_last),))
-            wm = state.getCurrentWatermarkMs()
-            timeout_ms = max(new_last // 1_000_000 + cd + 1000, wm + 1000)
-            state.setTimeoutTimestamp(timeout_ms)
-        if len(kept):
-            yield kept
+    return run
 
-    return matches.groupBy("conv_id", "rule_id").applyInPandasWithState(
-        fn,
-        outputStructType=MATCHES_SCHEMA,
-        stateStructType=COOLDOWN_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
+
+def _start(
+    spark: SparkSession,
+    stream: DataFrame,
+    process,
+    checkpoint_dir: str,
+    available_now: bool,
+    pinned: dict[str, str],
+):
+    """Start ``stream.writeStream.foreachBatch(process)`` with the
+    session confs ``pinned`` into this query (restored after start)."""
+    writer = (
+        stream.writeStream.foreachBatch(process)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
     )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    old_vals = {k: spark.conf.get(k, None) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        return writer.start()
+    finally:
+        for k, v in old_vals.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def start_pipeline_with_reload(
@@ -595,81 +485,36 @@ def start_pipeline_with_reload(
     available_now: bool = True,
     max_files_per_trigger: int | None = 1,
 ):
-    """T8 hot config reload WITH cross-batch cooldown state (round-2
-    verdict "what's missing #1"). The streaming DAG is fixed, but every
-    rule-dependent step reads the CURRENT rules file at execution time:
+    """T8 hot config reload WITH cross-batch cooldown state: the same
+    ``foreachBatch`` body as ``start_pipeline``, with the rule set read
+    from ``rules_path`` once per micro-batch on the driver
+    (``load_rules_yaml``; reference main.cpp:185-241). The source goes
+    straight to ``foreachBatch``, which runs ``match_turns`` on the
+    micro-batch, so every batch uses exactly one rule version -- write
+    the file with ``rules.publish_rules`` so no batch reads a
+    half-written one. Returns (query, sink).
 
-      match      -- ``match_turns_dynamic`` re-reads the YAML per task
-                    (mtime-cached stat, reference main.cpp:185-241);
-      cooldown   -- ``stream_cooldown_dynamic``: keyed state persists
-                    in the checkpoint across BOTH micro-batches and
-                    rule edits (ActionManager.h:148-150 -- the map
-                    outlives config swaps);
-      steps/render -- stateless, re-derived from fresh rules inside
-                    ``foreachBatch``.
-
-    So a user editing one rule's pattern keeps the suppression history
-    of every other rule -- previously a rule edit reset all cooldowns.
-    """
-    from logeventprocessor_spark.operators.match import match_turns_dynamic
-    from logeventprocessor_spark.rules import load_rules_yaml
-
+    The cooldown snapshot is keyed (conv_id, rule_id) and outlives rule
+    edits (ActionManager.h:148-150 -- the map outlives config swaps),
+    so a user editing one rule's pattern keeps the suppression history
+    of every rule. Keys of a rule that loses its cooldown are evicted
+    at the next ``advance`` (while no rule has a cooldown, no snapshot
+    is written and the last one stands). Late rows are dropped as in
+    ``start_pipeline``: only cooldown-rule matches behind the watermark."""
     sink = ParquetUpsertSink(out_dir)
-    stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
-    matched = match_turns_dynamic(stream, rules_path).withWatermark(
-        "ts", watermark
-    )
-    gated = stream_cooldown_dynamic(matched, rules_path)
+    state_dir = os.path.join(out_dir, "cooldown_state")
+    delay_ms = delay_to_ms(watermark)
+    run = _snapshot_batch(sink, None, ())
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def process(df: DataFrame, batch_id: int) -> None:
         rules = load_rules_yaml(rules_path)
-        sink.write(expand_steps(batch_df, rules), batch_id)
+        cool = CooldownSnapshotState(spark, state_dir, rules, delay_ms)
+        run(match_turns(df, [r for r in rules if r.enabled]), batch_id,
+            rules, cool)
 
-    writer = (
-        gated.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
+    stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
+    q = _start(spark, stream, process, checkpoint_dir, available_now, {})
     return q, sink
-
-
-def build_match_stream(
-    stream: DataFrame,
-    rules: list[Rule],
-    watermark: str = "10 minutes",
-    late_cutoff=None,
-    cooldown_impl=None,
-) -> DataFrame:
-    """source stream -> rendered action rows (unsunk).
-    ``cooldown_impl`` selects the keyed-state backend:
-    ``stream_cooldown`` (applyInPandasWithState, default) or
-    ``stream_cooldown_tws`` (Spark 4 transformWithStateInPandas,
-    requires RocksDB)."""
-    if late_cutoff is not None:
-        stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
-    # the DAG forks per branch and each branch re-executes its lineage
-    # per micro-batch, so split the RULE SET (not the match output):
-    # each branch regexes only its own rules -- total regex CPU stays
-    # one-pass even though the (cheap, columnar) source scan runs per
-    # branch
-    hot_rules = [r for r in rules if r.enabled and r.cooldown_ms > 0]
-    cold_rules = [r for r in rules if r.enabled and r.cooldown_ms == 0]
-    parts = []
-    if cold_rules:
-        parts.append(match_turns(stream, cold_rules))
-    if hot_rules:
-        # the watermark must sit on the stateful operator's direct
-        # input: mapInPandas produces a fresh event-time column, so
-        # the marker is (re)declared on the matches stream
-        mh = match_turns(stream, hot_rules).withWatermark("ts", watermark)
-        parts.append((cooldown_impl or stream_cooldown)(mh, hot_rules))
-    m = parts[0]
-    for p in parts[1:]:
-        m = m.unionByName(p)
-    return expand_steps(m, rules)
 
 
 def start_pipeline(
@@ -684,7 +529,6 @@ def start_pipeline(
     max_files_per_trigger: int | None = 1,
     ack_types: list[str] | None = None,
     state_store: str | None = None,
-    cooldown_backend: str = "snapshot",
     with_context_join: bool = False,
     context_mode: str = "join",
     pii_scrub: bool = False,
@@ -693,15 +537,20 @@ def start_pipeline(
 ):
     """Wire the full query and start it. Returns (query, sink).
 
+    ONE match pass over all enabled rules in the DAG; the cooldown is a
+    seeded batch ``mapInArrow`` inside ``foreachBatch`` with
+    per-batch-id parquet state snapshots (streaming/batch_state.py) --
+    no per-trigger state-store floor and no hot/cold double source
+    scan.
+
     ``pii_scrub``: redact PII at INGEST (``scrub_stream_text``) so no
     raw PII reaches rule extraction, rendered values, or the sink --
     note this changes match semantics by design (a rule extracting an
     email no longer fires once the email is a ``<EMAIL>`` token).
 
-    ``with_context_join`` (snapshot backend only): every sink row
-    carries the turn's role/tool context, via one of two plans
-    (``context_mode``), pinned output-identical by
-    tests/test_streaming_extras.py:
+    ``with_context_join``: every sink row carries the turn's role/tool
+    context, via one of two plans (``context_mode``), pinned
+    output-identical by tests/test_streaming.py:
 
     * ``"join"``: the T5 watermarked stream-stream join
       (``stream_join_context``) between match and cooldown. The
@@ -739,23 +588,12 @@ def start_pipeline(
     response, ActionSender.cpp:741-764) -- written to a second logical
     table inside the SAME micro-batch write (multi-table exactly-once).
 
-    ``state_store='rocksdb'``: spillable off-heap keyed state (the
-    10^12-turn backend -- HDFS-backed in-memory state cannot hold one
-    entry per active (conv_id, rule_id)). Session-level conf; keep it
-    constant for the lifetime of a checkpoint.
-
-    ``cooldown_backend`` selects the T1 keyed-state realization (pinned
-    identical by tests/test_streaming.py::test_cooldown_backends_agree):
-
-    * ``'snapshot'`` (default, the throughput path): ONE match pass
-      over all rules in the DAG, cooldown as a seeded batch
-      ``mapInArrow`` inside ``foreachBatch`` with per-batch-id parquet
-      state snapshots (streaming/batch_state.py). Measured
-      (scripts/stream_floor.py): applyInPandasWithState costs ~3-4 s
-      FIXED per trigger at 32 partitions even with zero rows; this
-      backend removes that floor and the hot/cold double source scan.
-    * ``'state'``: the store-native form -- hot/cold rule split with
-      ``applyInPandasWithState`` eviction timers (build_match_stream).
+    ``state_store='rocksdb'``: spillable off-heap keyed state for the
+    stream-stream context join (``context_mode='join'``, the only
+    store-backed state of this query; HDFS-backed in-memory state
+    cannot hold one entry per buffered turn at 10^12-turn scale).
+    Session-level conf; keep it constant for the lifetime of a
+    checkpoint.
     """
     if state_store == "rocksdb":
         spark.conf.set(
@@ -763,170 +601,60 @@ def start_pipeline(
             "org.apache.spark.sql.execution.streaming.state."
             "RocksDBStateStoreProvider",
         )
-    stream = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
-    if pii_scrub:
-        stream = scrub_stream_text(stream)
-    sink = ParquetUpsertSink(out_dir)
 
-    if cooldown_backend == "snapshot":
-        import os as _os
-
-        from logeventprocessor_spark.streaming.batch_state import (
-            CooldownSnapshotState,
-            delay_to_ms,
-        )
-
+    def source() -> DataFrame:
+        s = read_transcripts_stream(spark, input_dir, max_files_per_trigger)
+        if pii_scrub:
+            # the context side must see the same scrubbed text the
+            # match side prefilters on
+            s = scrub_stream_text(s)
         if late_cutoff is not None:
-            stream = stream.filter(F.col("ts") >= F.lit(late_cutoff))
-        enabled = [r for r in rules if r.enabled]
-        carry_ctx = with_context_join and context_mode == "carry"
-        matched = match_turns(
-            stream,
-            enabled,
-            ipc_meter=ipc_meter,
-            carry_cols=("role", "tool") if carry_ctx else (),
-        )
-        if with_context_join and context_mode == "join":
-            from logeventprocessor_spark.operators.match import (
-                prefilter_condition,
-            )
+            s = s.filter(F.col("ts") >= F.lit(late_cutoff))
+        return s
 
-            ctx_src = read_transcripts_stream(
-                spark, input_dir, max_files_per_trigger
-            )
-            if pii_scrub:
-                # the context side must see the same scrubbed text the
-                # match side prefilters on
-                ctx_src = scrub_stream_text(ctx_src)
-            if late_cutoff is not None:
-                ctx_src = ctx_src.filter(F.col("ts") >= F.lit(late_cutoff))
-            # the context side only exists to serve MATCHED turns, and
-            # a match requires some rule literal -- the same codegen'd
-            # prefilter that gates the Arrow boundary prunes the join
-            # state ~5x (unfiltered, EVERY turn in the watermark
-            # horizon sits in the join's state store)
-            pre = prefilter_condition(enabled)
-            if pre is not None:
-                ctx_src = ctx_src.filter(pre)
-            # join_window is a pure state-size knob here: a match row
-            # carries the turn's OWN ts, so the equality join always
-            # lands at zero time distance -- keep the buffer tight
-            matched = stream_join_context(
-                matched, ctx_src, watermark, join_window="1 minute"
-            )
-        cool = CooldownSnapshotState(
-            spark,
-            _os.path.join(out_dir, "cooldown_state"),
-            rules,
-            delay_to_ms(watermark),
-        )
-
-        sink.phases = []  # per-batch wall-time decomposition, free to
-        # collect (4 clock reads/batch); the scaling harness reads it
-
-        def process(df: DataFrame, batch_id: int) -> None:
-            # ONE cache (the gated matches) and TWO jobs per batch:
-            # (1) sink write -- which also populates the cache and
-            # computes the watermark's max event time for free via
-            # Observation; (2) the fires agg + snapshot write. A
-            # previous shape (cache raw matches AND gated, separate
-            # max-ts job) measured ~3.7 s of fixed per-batch work that
-            # capped streaming scaling (BENCH/BASELINE.md).
-            #
-            # Context (role/tool) rides THROUGH the gate and the step
-            # expansion as pass-through columns (apply_cooldown's
-            # output schema mirrors its input; expand_steps appends
-            # extra_cols) -- a previous shape split the context off,
-            # dropDuplicates'd it, and re-joined after expansion,
-            # costing a persist of the raw frame plus an extra
-            # exchange+agg and a join PER MICRO-BATCH for values the
-            # rows already carried.
-            import time as _t
-
-            from pyspark.sql import Observation
-
-            t0 = _t.time()
-            gated = cool.gate(df, batch_id).persist()
-            t_gate = _t.time()
-            try:
-                obs = Observation(f"wm_{batch_id}")
-                # watermark source = HOT-rule event time only, matching
-                # the store backend (its withWatermark sits on the hot
-                # match stream; cold rows must not advance eviction)
-                hot_ids = list(cool.cooldowns)
-                wm_src = F.when(
-                    F.col("rule_id").isin(hot_ids), F.col("ts")
-                )
-                out = expand_steps(
-                    gated.observe(obs, F.max(wm_src).alias("max_ts")),
-                    rules,
-                    extra_cols=(
-                        ("role", "tool") if with_context_join else ()
-                    ),
-                )
-                sink.write(out, batch_id)
-                if ack_types:
-                    acks = out.filter(
-                        F.col("action_type").isin(ack_types)
-                    ).select(
-                        "conv_id", "turn_idx", "rule_id", "step_idx",
-                        F.lit("ack").alias("status"), "ts",
-                    )
-                    sink.write_table("acks", acks, batch_id)
-                t_sink = _t.time()
-                cool.advance(gated, batch_id, max_ts=obs.get["max_ts"])
-                sink.phases.append({
-                    "batch_id": int(batch_id),
-                    # plan-build + snapshot read (driver-side)
-                    "gate_plan_s": round(t_gate - t0, 3),
-                    # job 1: scan->match->gate->expand->parquet write
-                    "sink_write_s": round(t_sink - t_gate, 3),
-                    # job 2: fires agg + snapshot commit
-                    "advance_s": round(_t.time() - t_sink, 3),
-                })
-            finally:
-                gated.unpersist()
-
-        actions = matched
-    else:
-        if with_context_join:
-            raise ValueError(
-                "with_context_join is implemented for the snapshot "
-                "backend (use stream_join_context directly otherwise)"
-            )
-        actions = build_match_stream(stream, rules, watermark, late_cutoff)
-
-        if ack_types:
-            def process(df: DataFrame, batch_id: int) -> None:
-                df = df.persist()
-                try:
-                    sink.write(df, batch_id)
-                    acks = df.filter(
-                        F.col("action_type").isin(ack_types)
-                    ).select(
-                        "conv_id", "turn_idx", "rule_id", "step_idx",
-                        F.lit("ack").alias("status"), "ts",
-                    )
-                    sink.write_table("acks", acks, batch_id)
-                finally:
-                    df.unpersist()
-        else:
-            process = sink.foreach_batch()
-
-    writer = (
-        actions.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
+    sink = ParquetUpsertSink(out_dir)
+    enabled = [r for r in rules if r.enabled]
+    carry_ctx = with_context_join and context_mode == "carry"
+    join_ctx = with_context_join and context_mode == "join"
+    matched = match_turns(
+        source(),
+        enabled,
+        ipc_meter=ipc_meter,
+        carry_cols=("role", "tool") if carry_ctx else (),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    # confs pinned into THIS query at start (session value restored
-    # right after start(), same mechanism as the state_partitions pin)
+    if join_ctx:
+        ctx_src = source()
+        # the context side only exists to serve MATCHED turns, and
+        # a match requires some rule literal -- the same codegen'd
+        # prefilter that gates the Arrow boundary prunes the join
+        # state ~5x (unfiltered, EVERY turn in the watermark
+        # horizon sits in the join's state store)
+        pre = prefilter_condition(enabled)
+        if pre is not None:
+            ctx_src = ctx_src.filter(pre)
+        # join_window is a pure state-size knob here: a match row
+        # carries the turn's OWN ts, so the equality join always
+        # lands at zero time distance -- keep the buffer tight
+        matched = stream_join_context(
+            matched, ctx_src, watermark, join_window="1 minute"
+        )
+    cool = CooldownSnapshotState(
+        spark,
+        os.path.join(out_dir, "cooldown_state"),
+        rules,
+        delay_to_ms(watermark),
+    )
+    run = _snapshot_batch(
+        sink, ack_types, ("role", "tool") if with_context_join else ()
+    )
+
+    def process(df: DataFrame, batch_id: int) -> None:
+        run(df, batch_id, rules, cool)
+
     pinned: dict[str, str] = {}
     if state_partitions is not None:
         pinned["spark.sql.shuffle.partitions"] = str(state_partitions)
-    if cooldown_backend == "snapshot" and with_context_join \
-            and context_mode == "join":
+    if join_ctx:
         # Skip the trailing NO-DATA micro-batch: for this query it
         # exists only to advance the watermark and evict join state --
         # an INNER time-bounded join emits every pair on the data batch
@@ -942,15 +670,5 @@ def start_pipeline(
         # between sparse batches for one fewer stateful commit cycle
         # per trigger.
         pinned["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
-    old_vals = {k: spark.conf.get(k, None) for k in pinned}
-    for k, v in pinned.items():
-        spark.conf.set(k, v)
-    try:
-        q = writer.start()
-    finally:
-        for k, v in old_vals.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+    q = _start(spark, matched, process, checkpoint_dir, available_now, pinned)
     return q, sink

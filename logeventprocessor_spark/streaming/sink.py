@@ -107,9 +107,6 @@ class ParquetUpsertSink:
             .drop("_rn", "batch_id")
         )
 
-    def foreach_batch(self):
-        return lambda df, bid: self.write(df, bid)
-
     def read(self, spark: SparkSession) -> DataFrame:
         """The logical output table: union of batches, deduplicated by
         the action key (keep the earliest batch's row -- they are

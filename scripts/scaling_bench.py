@@ -203,13 +203,13 @@ executor count. Per-round interpretation belongs in the curated
 
 **Streaming backends (history, round 4).** The default snapshot cooldown
 backend (streaming/batch_state.py) removed applyInPandasWithState's
-~3-4 s fixed per-trigger floor (scripts/stream_floor.py) and raised
+~3-4 s fixed per-trigger floor and raised
 ABSOLUTE stream throughput at every size vs round 3 (local[4]
 192.6K -> ~535-557K turns/s, local[16] 719.9K -> ~1.11-1.17M,
-local[32] 1.27M -> 1.32M). The store-native backend remains
-selectable and is the one whose N->4N ratio clears 0.8 -- its fixed
-floor suppresses the small-N baseline; the two backends are pinned
-output-identical by test. The snapshot backend Pareto-dominates on
+local[32] 1.27M -> 1.32M). The store-native backend (since removed;
+the snapshot path is now the only streaming cooldown) was the one
+whose N->4N ratio cleared 0.8 -- its fixed floor suppressed the
+small-N baseline. The snapshot backend Pareto-dominates on
 throughput (faster at N AND at 4N); its lower ratio is the
 arithmetic of a much-faster small-N baseline divided into the same
 boundary-bounded large-N ceiling, not a capability regression --

@@ -54,7 +54,6 @@ def main():
     legs = {"batch", "stream", "jvm"}
     want_ipc = False
     n_runs = 5
-    backend = "snapshot"  # --backend=state selects the store-native T1
     for a in sys.argv[3:]:
         if a.startswith("--mfpt="):
             mfpt = int(a.split("=", 1)[1])
@@ -64,8 +63,6 @@ def main():
             want_ipc = True
         elif a.startswith("--runs="):
             n_runs = int(a.split("=", 1)[1])
-        elif a.startswith("--backend="):
-            backend = a.split("=", 1)[1]
 
     # input-split sizing: the ~8 MB bench files pack into ~13 partitions
     # under the 128 MB default, capping scan+match parallelism below
@@ -134,7 +131,6 @@ def main():
                     spark, input_dir, rules,
                     out_dir=f"{tmp}/out", checkpoint_dir=f"{tmp}/ckpt",
                     watermark="10 minutes", max_files_per_trigger=mfpt,
-                    cooldown_backend=backend,
                     ipc_meter=meter,
                 )
                 q.awaitTermination(3600)

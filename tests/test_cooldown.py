@@ -5,7 +5,7 @@ from __future__ import annotations
 import pandas as pd
 
 from logeventprocessor_spark.generator import transcripts_df
-from logeventprocessor_spark.operators.cooldown import apply_cooldown, suppress_group
+from logeventprocessor_spark.operators.cooldown import apply_cooldown
 from logeventprocessor_spark.operators.match import match_turns
 from logeventprocessor_spark.oracle import oracle_matches
 from logeventprocessor_spark.rules import Rule, RuleStep
@@ -86,44 +86,57 @@ def test_zero_cooldown_is_off(spark):
     assert len(got) == 2
 
 
-def test_suppress_group_state_carry():
-    """The shared scan function carries state across calls -- the
-    contract the streaming path relies on."""
-    g1 = pd.DataFrame({"ts": pd.to_datetime(["2024-03-01 00:00:00"]),
-                       "turn_idx": [0]})
-    g2 = pd.DataFrame(
-        {
-            "ts": pd.to_datetime(["2024-03-01 00:00:03", "2024-03-01 00:00:06"]),
-            "turn_idx": [1, 2],
-        }
+def _prior(spark, last_fire: pd.Timestamp, conv="c", rule_id="ping"):
+    """A snapshot seed frame: one key's last fire in UTC epoch ns."""
+    return spark.createDataFrame(
+        [(conv, rule_id, int(last_fire.value))],
+        "conv_id string, rule_id string, prior_ns long",
     )
-    kept1, last1 = suppress_group(g1, 5000)
-    assert len(kept1) == 1 and last1 is not None
-    kept2, last2 = suppress_group(g2, 5000, last_fire_ns=last1)
-    assert kept2["turn_idx"].tolist() == [2]
-    assert last2 == int(pd.Timestamp("2024-03-01 00:00:06").value)
 
 
-def test_suppress_group_tz_aware_is_epoch_based():
-    """tz-aware frames must normalize to UTC EPOCH ns, not wall time:
-    the streaming backends seed last_fire_ns from JVM unix_micros (UTC
-    epoch), so a non-UTC tz-aware frame dropped to wall time would skew
-    every cross-batch cooldown by the tz offset (round-4 advice)."""
+def test_prior_seed_carries_state_across_batches(spark):
+    """The ``prior`` seed carries a key's last fire into the next
+    batch -- the contract the streaming cooldown relies on: a fire 3 s
+    after the seeded one is suppressed, the fire 6 s after is kept."""
+    _, turns = _turns(
+        spark,
+        [
+            ("ping b", "2024-03-01 00:00:03"),
+            ("ping c", "2024-03-01 00:00:06"),
+        ],
+    )
+    prior = _prior(spark, pd.Timestamp("2024-03-01 00:00:00"))
+    got = apply_cooldown(match_turns(turns, RULES), RULES, prior=prior)
+    assert got.toPandas()["turn_idx"].tolist() == [1]
+
+
+def test_prior_seed_tz_aware_is_epoch_based(spark):
+    """Under a non-UTC session timezone the scan must compare UTC
+    EPOCH ns, not wall time: the seed comes from JVM unix_micros (UTC
+    epoch), so a frame dropped to +05:00 wall time would skew every
+    cross-batch cooldown by the tz offset (round-4 advice)."""
     base = pd.Timestamp("2024-03-01 00:00:00", tz="UTC")
-    # same instants rendered in a +05:00 zone
-    g = pd.DataFrame(
+    pdf = pd.DataFrame(
         {
-            "ts": pd.to_datetime(
-                [base + pd.Timedelta(seconds=s) for s in (0, 3, 6)]
-            ).tz_convert("Asia/Karachi"),
-            "turn_idx": [0, 1, 2],
+            "conv_id": ["c"] * 3,
+            "turn_idx": pd.array([0, 1, 2], dtype="int32"),
+            "role": ["user"] * 3,
+            "text": ["ping"] * 3,
+            "tool": [""] * 3,
+            "ts": [base + pd.Timedelta(seconds=s) for s in (0, 3, 6)],
         }
     )
-    # seed: a fire at base-4s in epoch ns -> +0s is inside the 5 s
-    # cooldown (gap 4s), +3s fires (gap 7s), +6s is suppressed (gap
-    # 3s). A wall-time skew (+05:00 -> every ts 5h past the seed)
-    # would instead fire turn 0 -- which this pins against.
-    seed = int((base - pd.Timedelta(seconds=4)).value)
-    kept, last = suppress_group(g, 5000, last_fire_ns=seed)
-    assert kept["turn_idx"].tolist() == [1]
-    assert last == int((base + pd.Timedelta(seconds=3)).value)
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Karachi")
+    try:
+        # seed: a fire at base-4s in epoch ns -> +0s is inside the 5 s
+        # cooldown (gap 4s), +3s fires (gap 7s), +6s is suppressed (gap
+        # 3s). A wall-time skew (+05:00 -> every ts 5h past the seed)
+        # would instead fire turn 0 -- which this pins against.
+        prior = _prior(spark, base - pd.Timedelta(seconds=4))
+        got = apply_cooldown(
+            match_turns(transcripts_df(spark, pdf), RULES), RULES, prior=prior
+        ).toPandas()
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    assert got["turn_idx"].tolist() == [1]

@@ -448,12 +448,18 @@ def test_repetition_ratio(spark):
         (0, "spam spam spam spam spam spam"),  # 4 grams, 1 distinct
         (1, "all words here are different okay"),  # 4 grams, 4 distinct
         (2, "too short"),  # < 3 tokens -> null
+        # tab/newline edges: tokens are counted from the same
+        # whitespace-normalized string the grams come from
+        (3, "alpha beta gamma delta\n"),  # 2 grams, 2 distinct
+        (4, "\talpha beta"),  # 2 tokens -> null
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = Tx.with_repetition_ratio(df).toPandas().set_index("doc_id")
     assert got.loc[0, "rep_ratio"] == 0.75 and got.loc[0, "n_grams"] == 4
     assert got.loc[1, "rep_ratio"] == 0.0
     assert pd.isna(got.loc[2, "rep_ratio"])
+    assert got.loc[3, "rep_ratio"] == 0.0 and got.loc[3, "n_grams"] == 2
+    assert pd.isna(got.loc[4, "rep_ratio"]) and pd.isna(got.loc[4, "n_grams"])
 
 
 def test_lang_id_heuristic(spark):

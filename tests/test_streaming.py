@@ -437,25 +437,6 @@ def test_context_carry_matches_context_join(spark, fixture_dirs, tmp_path):
     pd.testing.assert_frame_equal(outs["join"], outs["carry"])
 
 
-def test_cooldown_backends_agree(spark, fixture_dirs, tmp_path):
-    """The snapshot backend (foreachBatch-managed parquet state, the
-    throughput path) and the state-store backend (applyInPandasWithState)
-    must produce the identical logical table across multi-batch runs --
-    T1 semantics cannot depend on the state implementation."""
-    pdf, input_dir, _ = fixture_dirs
-    rules = canonical_rules()
-    outs = {}
-    for backend in ("snapshot", "state"):
-        out = str(tmp_path / f"out_{backend}")
-        q, sink = start_pipeline(
-            spark, input_dir, rules, out, str(tmp_path / f"ckpt_{backend}"),
-            cooldown_backend=backend,
-        )
-        q.awaitTermination(300)
-        outs[backend] = _norm(sink.read(spark).toPandas())
-    pd.testing.assert_frame_equal(outs["snapshot"], outs["state"])
-
-
 def test_snapshot_state_replay_identical(spark, tmp_path):
     """Crash-replay contract of the snapshot cooldown state: re-running
     batch N (after a crash between output write and checkpoint commit)
@@ -514,12 +495,12 @@ def test_snapshot_state_replay_identical(spark, tmp_path):
     assert sorted(g2.toPandas()["turn_idx"]) == [4]
 
 
-def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
-    """Late-data parity (round-4 review finding): a hot-rule match
-    arriving AFTER the watermark passed its cooldown window must be
-    dropped by BOTH backends -- the store backend drops it before the
-    stateful op; the snapshot backend's gate() must replicate that,
-    else an evicted key lets a within-cooldown fire through."""
+def test_snapshot_cooldown_drops_late_data(spark, tmp_path):
+    """Late data on the snapshot cooldown: a hot-rule match arriving
+    AFTER the watermark passed its cooldown window must be dropped (the
+    rule Spark applies before any stateful operator) -- else an evicted
+    key lets a within-cooldown fire through. The output equals the
+    oracle on the two non-late files, and the late fire is absent."""
     import os
 
     from logeventprocessor_spark.schema import TRANSCRIPTS_SCHEMA
@@ -550,19 +531,61 @@ def test_cooldown_backends_agree_on_late_data(spark, tmp_path):
         pdf.to_parquet(p, index=False)
         os.utime(p, ns=(1_000_000_000_000_000_000 + i * 10**9,) * 2)
 
-    outs = {}
-    for backend in ("snapshot", "state"):
-        out = str(tmp_path / f"out_{backend}")
-        q, sink = start_pipeline(
-            spark, input_dir, canonical_rules(), out,
-            str(tmp_path / f"ckpt_{backend}"),
-            watermark="1 minute", max_files_per_trigger=1,
-            cooldown_backend=backend,
-        )
-        q.awaitTermination(300)
-        outs[backend] = _norm(sink.read(spark).toPandas())
-    # the late fire must be absent from BOTH outputs
-    for backend, got in outs.items():
-        c_turns = set(got[got["conv_id"] == "c"]["turn_idx"])
-        assert 2 not in c_turns, f"{backend} emitted the late fire"
-    pd.testing.assert_frame_equal(outs["snapshot"], outs["state"])
+    rules = canonical_rules()
+    q, sink = start_pipeline(
+        spark, input_dir, rules, str(tmp_path / "out"),
+        str(tmp_path / "ckpt"),
+        watermark="1 minute", max_files_per_trigger=1,
+    )
+    q.awaitTermination(300)
+    got = _norm(sink.read(spark).toPandas())
+    assert 2 not in set(got[got["conv_id"] == "c"]["turn_idx"]), (
+        "the late fire was emitted"
+    )
+    exp = _norm(oracle_matches(pd.concat([f0, f1], ignore_index=True), rules))
+    assert len(exp) > 0
+    pd.testing.assert_frame_equal(got, exp)
+
+
+def test_crash_after_sink_write_recovers_exactly_once(
+    spark, fixture_dirs, tmp_path, monkeypatch
+):
+    """A real crash: the snapshot commit of batch 1 raises AFTER
+    ``sink.write`` has committed that batch, so the query dies with
+    the exception and batch 1 is uncommitted in the checkpoint. A
+    restart on the same checkpoint and output directories replays
+    batch 1 from the last committed snapshot; the sink then equals the
+    oracle row for row, with no duplicate action key."""
+    from pyspark.errors import StreamingQueryException
+
+    from logeventprocessor_spark.streaming.batch_state import (
+        CooldownSnapshotState,
+    )
+
+    pdf, input_dir, _ = fixture_dirs
+    rules = canonical_rules()
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    advance = CooldownSnapshotState.advance
+    crashed = []
+
+    def advance_crashing_once(self, gated, batch_id, max_ts=None):
+        if batch_id == 1 and not crashed:
+            crashed.append(batch_id)
+            raise RuntimeError("injected crash before snapshot commit")
+        return advance(self, gated, batch_id, max_ts=max_ts)
+
+    monkeypatch.setattr(CooldownSnapshotState, "advance", advance_crashing_once)
+    q1, sink = start_pipeline(spark, input_dir, rules, out_dir, ckpt)
+    with pytest.raises(StreamingQueryException, match="injected crash"):
+        q1.awaitTermination(300)
+    assert crashed == [1]
+    assert os.path.isdir(sink.batch_dir(1)), "batch 1 reached the sink"
+    assert not os.path.exists(
+        os.path.join(out_dir, "cooldown_state", "batch_id=1", "meta.json")
+    )
+
+    q2, sink = start_pipeline(spark, input_dir, rules, out_dir, ckpt)
+    q2.awaitTermination(300)
+    got = sink.read(spark).toPandas()
+    assert not got.duplicated(KEY).any()
+    pd.testing.assert_frame_equal(_norm(got), _norm(oracle_matches(pdf, rules)))
